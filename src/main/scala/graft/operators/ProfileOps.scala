@@ -95,10 +95,18 @@ object ProfileOps {
     * [[graft.streaming.StreamQueries.psiCountsStream]] emission per
     * bucket joined to a stored reference profile and it yields the same
     * k rows the batch queries produce (StreamingSpec asserts equality). */
-  def psiFromCounts(counts: DataFrame, k: Int): DataFrame = {
+  def psiFromCounts(counts: DataFrame, k: Int): DataFrame =
+    smoothedCounts(counts, k)
+      .withColumn("psi_term", psiTerm)
+      .select(col("bucket"), col("n_ref"), col("n_cur"), col("psi_term"))
+      .orderBy("bucket")
+
+  /** The smoothing half shared by every PSI/JSD assembly: the k-row
+    * bucket frame with (+0.5)-smoothed `p_ref`/`p_cur` shares. */
+  private def smoothedCounts(counts: DataFrame, k: Int): DataFrame = {
     // right-join against the full 0..k-1 bucket frame: a bucket empty in
     // BOTH snapshots still owes its (smoothed, nonzero when totals
-    // differ) PSI term, and the output is always exactly k rows
+    // differ) divergence term, and the output is always exactly k rows
     val frame = counts.sparkSession.range(k.toLong)
       .select(col("id").cast("int").as("bucket"))
     val w = Window.orderBy(col("bucket")).rowsBetween(
@@ -111,46 +119,42 @@ object ProfileOps {
         (col("n_ref") + lit(0.5)) / (col("_tr") + lit(0.5 * k)))
       .withColumn("p_cur",
         (col("n_cur") + lit(0.5)) / (col("_tc") + lit(0.5 * k)))
-      .withColumn("psi_term", round(
-        (col("p_cur") - col("p_ref")) * log(col("p_cur") / col("p_ref")), 8))
-      .select(col("bucket"), col("n_ref"), col("n_cur"), col("psi_term"))
-      .orderBy("bucket")
+  }
+
+  private val psiTerm: Column = round(
+    (col("p_cur") - col("p_ref")) * log(col("p_cur") / col("p_ref")), 8)
+
+  private val jsTerm: Column = {
+    val m = (col("p_ref") + col("p_cur")) / 2
+    round(lit(0.5) * col("p_ref") * log(col("p_ref") / m)
+      + lit(0.5) * col("p_cur") * log(col("p_cur") / m), 8)
   }
 
   /** The persistable reference half of a drift gate: per-bucket counts of
     * `valueCol` under the PSI bucketing — compute once on the blessed
-    * snapshot, store k rows, hand to [[psiAgainstRef]] forever after. */
+    * snapshot, store k rows, hand to [[divergenceAgainstRef]] forever
+    * after. */
   def refBucketCounts(df: DataFrame, valueCol: String,
       lo: Double, hi: Double, k: Int): DataFrame =
     df.filter(col(valueCol).isNotNull)
       .groupBy(psiBucket(col(valueCol), lo, hi, k).as("bucket"))
       .agg(count(lit(1)).as("n_ref"))
 
-  /** PSI of `cur` against a STORED reference profile (the
-    * [[refBucketCounts]] k-row table) — the form a per-batch ingest gate
-    * or a streaming monitor uses: the reference never rescans, the
-    * current side is one conditional-count pass over the batch, and the
-    * assembly is k rows. Same output shape and smoothing as [[psiDrift]]
-    * (identical by construction: both route through the shared
-    * assembly), so thresholds transfer unchanged. */
-  def psiAgainstRef(cur: DataFrame, valueCol: String, ref: DataFrame,
+  /** Total PSI and JSD of `cur` against one STORED [[refBucketCounts]]
+    * profile as ONE row `(psi, js)` — the form a per-batch ingest gate
+    * uses: the reference never rescans, the current side is one
+    * conditional-count pass over the batch joined to the profile, and
+    * both divergences assemble from that one k-row frame, so a gate armed
+    * with both lines pays one job, not two. Each total is the sum of the
+    * same rounded per-bucket terms [[psiDrift]] and [[jsDrift]] emit
+    * (shared smoothing and term expressions), so thresholds transfer
+    * unchanged (StreamingSpec asserts the sums agree). */
+  def divergenceAgainstRef(cur: DataFrame, valueCol: String, ref: DataFrame,
       lo: Double, hi: Double, k: Int): DataFrame = {
     require(k > 0 && hi > lo,
-      "psiAgainstRef needs a positive bucket count and range")
-    psiFromCounts(refJoinedCounts(cur, valueCol, ref, lo, hi, k), k)
-  }
-
-  /** JSD of `cur` against the same STORED [[refBucketCounts]] profile —
-    * the q52 monitor's ingest/streaming form. Shares the current-side
-    * conditional-count pass and the reference join with
-    * [[psiAgainstRef]], so one stored profile and one
-    * [[graft.streaming.StreamQueries.psiCountsStream]] emission serve
-    * BOTH divergences (batch≡stream asserted in StreamingSpec). */
-  def jsAgainstRef(cur: DataFrame, valueCol: String, ref: DataFrame,
-      lo: Double, hi: Double, k: Int): DataFrame = {
-    require(k > 0 && hi > lo,
-      "jsAgainstRef needs a positive bucket count and range")
-    jsFromCounts(refJoinedCounts(cur, valueCol, ref, lo, hi, k), k)
+      "divergenceAgainstRef needs a positive bucket count and range")
+    smoothedCounts(refJoinedCounts(cur, valueCol, ref, lo, hi, k), k)
+      .agg(sum(psiTerm).as("psi"), sum(jsTerm).as("js"))
   }
 
   private def refJoinedCounts(cur: DataFrame, valueCol: String,
@@ -186,26 +190,11 @@ object ProfileOps {
     * BOTH divergences from the SAME
     * [[graft.streaming.StreamQueries.psiCountsStream]] state joined to
     * one stored [[refBucketCounts]] profile. */
-  def jsFromCounts(counts: DataFrame, k: Int): DataFrame = {
-    val frame = counts.sparkSession.range(k.toLong)
-      .select(col("id").cast("int").as("bucket"))
-    val w = Window.orderBy(col("bucket")).rowsBetween(
-      Window.unboundedPreceding, Window.unboundedFollowing)
-    frame.join(counts, Seq("bucket"), "left")
-      .na.fill(0L, Seq("n_ref", "n_cur"))
-      .withColumn("_tr", sum(col("n_ref")).over(w))
-      .withColumn("_tc", sum(col("n_cur")).over(w))
-      .withColumn("p_ref",
-        (col("n_ref") + lit(0.5)) / (col("_tr") + lit(0.5 * k)))
-      .withColumn("p_cur",
-        (col("n_cur") + lit(0.5)) / (col("_tc") + lit(0.5 * k)))
-      .withColumn("_m", (col("p_ref") + col("p_cur")) / 2)
-      .withColumn("js_term", round(
-        lit(0.5) * col("p_ref") * log(col("p_ref") / col("_m"))
-          + lit(0.5) * col("p_cur") * log(col("p_cur") / col("_m")), 8))
+  def jsFromCounts(counts: DataFrame, k: Int): DataFrame =
+    smoothedCounts(counts, k)
+      .withColumn("js_term", jsTerm)
       .select(col("bucket"), col("n_ref"), col("n_cur"), col("js_term"))
       .orderBy("bucket")
-  }
 
   /** Welch's unequal-variance t-test between two row populations of one
     * column — the A/B mean-shift decision (did the new crawl source /
@@ -260,7 +249,7 @@ object ProfileOps {
     * stream — so a faithful streaming KS does not exist at fixed memory.
     * Bucketizing KS to make it streamable just reproduces a fixed-frame
     * divergence, i.e. the PSI/JS gate that already runs
-    * ([[jsAgainstRef]] / [[psiAgainstRef]] in IngestDedupApp). Run exact
+    * ([[divergenceAgainstRef]] in IngestDedupApp). Run exact
     * KS per batch/epoch against a persisted reference SAMPLE instead. */
   def ksDrift(df: DataFrame, valueCol: String, refPred: Column,
       curPred: Column): DataFrame = {

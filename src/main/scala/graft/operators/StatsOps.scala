@@ -152,7 +152,7 @@ object StatsOps {
 
   /** The z-scoring half of [[volumeAnomalies]], split out so the
     * streaming twin scores its watermark-finalized daily-count store
-    * with the IDENTICAL window arithmetic (the psiAgainstRef
+    * with the IDENTICAL window arithmetic (the psiFromCounts
     * architecture: the stream owns exact counts, the shared batch
     * assembly owns the math — batch≡stream by construction, not by
     * re-implementation). `daily` must carry (event_type, day, n). */

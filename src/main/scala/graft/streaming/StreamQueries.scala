@@ -485,7 +485,7 @@ object StreamQueries {
     * trigger re-emits the touched buckets' running counts; the monitor
     * joins the latest emission per bucket against a persisted
     * [[graft.operators.ProfileOps.refBucketCounts]] profile and runs the
-    * k-row PSI assembly ([[graft.operators.ProfileOps.psiAgainstRef]]) —
+    * k-row PSI assembly ([[graft.operators.ProfileOps.psiFromCounts]]) —
     * metadata-scale work per trigger, no rescan of anything. Bucketing is
     * the SAME [[graft.operators.ProfileOps.psiBucket]] expression the
     * batch drift queries use, so batch≡stream holds by construction
